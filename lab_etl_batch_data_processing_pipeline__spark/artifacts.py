@@ -23,7 +23,9 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -186,7 +188,7 @@ def _pq_index_dir(sf_dir: str) -> str:
 
 _IVFPQ_PARAMS = {
     "nlist": 8, "nprobe": 3, "m": 16, "ksub": 32, "seed": 42, "rerank": 100,
-    "deterministic": True,  # r10: same rationale as _PQ_PARAMS
+    "max_iter": 4, "deterministic": True,  # r10: same rationale as _PQ_PARAMS
 }
 
 
@@ -473,63 +475,72 @@ def _quality_labels(docs: DataFrame) -> DataFrame:
 
 
 
-def prebuild_indexes(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize offline index structures (the IVF inverted file and
-    the ANN ground-truth table) for ``sf_dir`` if absent, and sweep
-    caches superseded by a testdata regeneration. Called by bench.py
-    during setup — these are offline jobs at scale, queries only
-    probe/read."""
-    sweep_stale_caches(sf_dir)
+def _build_ground_truth(spark: SparkSession, sf_dir: str) -> None:
     _ground_truth_topk(spark, sf_dir, k=5)
+
+
+def _build_pq_index(spark: SparkSession, sf_dir: str) -> None:
     pq_dir = _pq_index_dir(sf_dir)
-    if not os.path.isfile(os.path.join(pq_dir, "_BUILT")):
-        p = _PQ_PARAMS
-        similarity.build_pq_index(
-            _t(spark, sf_dir, "embeddings"), pq_dir,
-            m=p["m"], ksub=p["ksub"], seed=p["seed"],
-            deterministic=p["deterministic"],
-        )
-    ivfpq_dir = _ivfpq_index_dir(sf_dir)
-    if not os.path.isfile(os.path.join(ivfpq_dir, "_BUILT")):
-        p = _IVFPQ_PARAMS
-        # the flat-PQ index above trained identical codebooks AND codes
-        # (same m/ksub/quantizer over the same corpus) — reuse both
-        # instead of re-running the m fits (on the deterministic path
-        # the reuse is exact by construction, not just same-seed luck)
-        shared_cb = shared_codes = None
-        if (
-            p["m"] == _PQ_PARAMS["m"]
-            and p["ksub"] == _PQ_PARAMS["ksub"]
-            and p["seed"] == _PQ_PARAMS["seed"]
-            and p["deterministic"] == _PQ_PARAMS["deterministic"]
-        ):
-            shared_cb, shared_codes = similarity.read_pq_index(spark, pq_dir)
-        similarity.build_ivfpq_index(
-            _t(spark, sf_dir, "embeddings"), ivfpq_dir,
-            nlist=p["nlist"], m=p["m"], ksub=p["ksub"], seed=p["seed"],
-            codebooks=shared_cb, encoded=shared_codes,
-            deterministic=p["deterministic"],
-        )
+    if os.path.isfile(os.path.join(pq_dir, "_BUILT")):
+        return
+    p = _PQ_PARAMS
+    similarity.build_pq_index(
+        _t(spark, sf_dir, "embeddings"), pq_dir,
+        m=p["m"], ksub=p["ksub"], seed=p["seed"],
+        deterministic=p["deterministic"],
+    )
+
+
+def _build_ivf_index(spark: SparkSession, sf_dir: str) -> None:
     index_dir = _ivf_index_dir(sf_dir)
     # The _BUILT sentinel is written after BOTH index writes complete
     # (partitioned writes leave no root _SUCCESS under dynamic partition
     # overwrite); a partial directory from an interrupted build must not
     # pass for a valid index.
-    if not os.path.isfile(os.path.join(index_dir, "_BUILT")):
-        emb = _t(spark, sf_dir, "embeddings")
-        similarity.build_ivf_index(
-            emb,
-            nlist=_IVF_PARAMS["nlist"],
-            seed=_IVF_PARAMS["seed"],
-            max_iter=_IVF_PARAMS["max_iter"],
-            index_dir=index_dir,
-            deterministic=_IVF_PARAMS["deterministic"],
+    if os.path.isfile(os.path.join(index_dir, "_BUILT")):
+        return
+    p = _IVF_PARAMS
+    similarity.build_ivf_index(
+        _t(spark, sf_dir, "embeddings"),
+        nlist=p["nlist"], seed=p["seed"], max_iter=p["max_iter"],
+        index_dir=index_dir, deterministic=p["deterministic"],
+    )
+
+
+def _build_ivfpq_index(spark: SparkSession, sf_dir: str) -> None:
+    ivfpq_dir = _ivfpq_index_dir(sf_dir)
+    if os.path.isfile(os.path.join(ivfpq_dir, "_BUILT")):
+        return
+    p = _IVFPQ_PARAMS
+    # The flat-PQ index trained identical codebooks AND codes (same
+    # m/ksub/quantizer over the same corpus), and the IVF index ran the
+    # identical coarse-quantizer fit (same nlist/iters): reuse all three
+    # instead of re-running the fits. On the deterministic path the reuse
+    # is exact by construction, not just same-seed luck.
+    shared_cb = shared_codes = shared_ivf = None
+    if all(p[k] == _PQ_PARAMS[k] for k in ("m", "ksub", "seed", "deterministic")):
+        shared_cb, shared_codes = similarity.read_pq_index(
+            spark, _pq_index_dir(sf_dir)
         )
-    # Shared dedup sketches: tokenize/shingle-hash the documents table
-    # ONCE per generation; every Jaccard/MinHash consumer then reads the
-    # artifact instead of re-sketching (the 4 most expensive dense-dedup
-    # bench rows shared this exact map-side cost). Sentinel written LAST,
-    # same contract as the ANN index builders.
+    if all(
+        p[k] == _IVF_PARAMS[k]
+        for k in ("nlist", "max_iter", "seed", "deterministic")
+    ):
+        shared_ivf = similarity.read_ivf_index(spark, _ivf_index_dir(sf_dir))
+    similarity.build_ivfpq_index(
+        _t(spark, sf_dir, "embeddings"), ivfpq_dir,
+        nlist=p["nlist"], m=p["m"], ksub=p["ksub"], seed=p["seed"],
+        max_iter=p["max_iter"], codebooks=shared_cb, encoded=shared_codes,
+        ivf=shared_ivf, deterministic=p["deterministic"],
+    )
+
+
+def _build_dedup_sketches(spark: SparkSession, sf_dir: str) -> None:
+    """Shared dedup sketches: tokenize/shingle-hash the documents table
+    ONCE per generation; every Jaccard/MinHash consumer then reads the
+    artifact instead of re-sketching (the 4 most expensive dense-dedup
+    bench rows shared this exact map-side cost). Sentinel written LAST,
+    same contract as the ANN index builders."""
     sk_dir = _toksketch_dir(sf_dir)
     if not os.path.isfile(os.path.join(sk_dir, "_BUILT")):
         dedup_fuzzy.token_sketch(
@@ -545,19 +556,68 @@ def prebuild_indexes(spark: SparkSession, sf_dir: str) -> None:
             ).write.mode("overwrite").parquet(os.path.join(sig_dir, "sigs"))
             with open(os.path.join(sig_dir, "_BUILT"), "w") as marker:
                 marker.write("ok\n")
-    # Quality-classifier weights: the integer-GD fit is bit-deterministic,
-    # so training here vs inline in the query yields identical weights —
-    # the artifact only moves the fit out of timed bench rows.
+
+
+def _build_quality_weights(spark: SparkSession, sf_dir: str) -> None:
+    """Quality-classifier weights: the integer-GD fit is bit-deterministic,
+    so training here vs inline in the query yields identical weights —
+    the artifact only moves the fit out of timed bench rows."""
     qdir = _quality_weights_dir(sf_dir)
-    if not os.path.isfile(os.path.join(qdir, "_BUILT")):
-        docs = _t(spark, sf_dir, "documents")
-        weights = quality.train_quality_classifier(
-            quality.hashed_char_ngram_features(docs), _quality_labels(docs)
-        )
-        os.makedirs(qdir, exist_ok=True)
-        with open(os.path.join(qdir, "weights.json"), "w") as fh:
-            json.dump(weights, fh)
-        with open(os.path.join(qdir, "_BUILT"), "w") as marker:
-            marker.write("ok\n")
+    if os.path.isfile(os.path.join(qdir, "_BUILT")):
+        return
+    docs = _t(spark, sf_dir, "documents")
+    weights = quality.train_quality_classifier(
+        quality.hashed_char_ngram_features(docs), _quality_labels(docs)
+    )
+    os.makedirs(qdir, exist_ok=True)
+    with open(os.path.join(qdir, "weights.json"), "w") as fh:
+        json.dump(weights, fh)
+    with open(os.path.join(qdir, "_BUILT"), "w") as marker:
+        marker.write("ok\n")
 
 
+#: The offline build graph: each builder -> the builders whose artifacts
+#: it reads. prebuild_indexes submits in this order and waits for a
+#: dependent's inputs before submitting it, so the roots come first.
+_BUILD_GRAPH = {
+    _build_ground_truth: (),
+    _build_pq_index: (),
+    _build_ivf_index: (),
+    _build_dedup_sketches: (),
+    _build_quality_weights: (),
+    _build_ivfpq_index: (_build_pq_index, _build_ivf_index),
+}
+
+
+def prebuild_indexes(spark: SparkSession, sf_dir: str) -> None:
+    """Materialize every offline artifact of ``sf_dir`` that is absent,
+    after sweeping caches superseded by a testdata regeneration. Called
+    by bench setup — these are offline jobs at scale, queries only
+    probe/read.
+
+    The build graph (:data:`_BUILD_GRAPH`): the ANN ground truth, the PQ
+    index, the IVF index, the token sketch plus both MinHash signature
+    variants, and the quality-classifier weights are independent; the
+    IVFPQ index reuses the PQ codebooks/codes and the IVF quantizer, so
+    {PQ, IVF} -> IVFPQ is the one ordering constraint. Each build is a
+    chain of small, latency-bound jobs that leaves most executor cores
+    idle, so the independent builds run concurrently on driver threads
+    (as many as there are roots); the threads inherit the caller's job
+    group and local properties. The stale-cache sweep deletes
+    directories and runs alone, first. Every build runs to completion
+    even if another fails; the first failure in graph order is then
+    re-raised. A failed build writes no ``_BUILT`` (each builder writes
+    its sentinel last) and its dependents are skipped — consumers take
+    the inline path with identical values."""
+    sweep_stale_caches(sf_dir)
+    roots = sum(not deps for deps in _BUILD_GRAPH.values())
+    futures = {}
+    with ThreadPoolExecutor(max_workers=roots) as pool:
+        for build, deps in _BUILD_GRAPH.items():
+            # exception() blocks until that dependency has finished
+            if all(d in futures and futures[d].exception() is None for d in deps):
+                futures[build] = pool.submit(
+                    inheritable_thread_target(spark)(build), spark, sf_dir
+                )
+    for future in futures.values():
+        future.result()

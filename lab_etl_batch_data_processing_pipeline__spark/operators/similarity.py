@@ -1449,6 +1449,7 @@ def build_ivfpq_index(
     residual: bool = False,
     deterministic: bool = False,
     encoded: DataFrame | None = None,
+    ivf: tuple[DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Composed IVF×PQ index — the production billion-scale ANN layout
     (FAISS IVFPQ, Jégou et al. TPAMI'11): one parquet dataset of
@@ -1475,17 +1476,21 @@ def build_ivfpq_index(
     DuckDB value-hash twin (query key ann_cosine_ivfpq since r10).
     Pass ``codebooks`` AND ``encoded`` from a same-parameter
     deterministic PQ index to skip the m refits (identical training by
-    construction).
+    construction). Likewise pass ``ivf=(inverted, centroids)`` from a
+    same-parameter IVF index (:func:`build_ivf_index` with the same
+    nlist/seed/max_iter/deterministic) to skip the coarse-quantizer fit.
     """
     if deterministic and residual:
         raise ValueError(
             "build_ivfpq_index: deterministic currently covers the plain "
             "layout only"
         )
-    inverted, centroid_df = build_ivf_index(
-        corpus, nlist, id_col, vec_col, seed, max_iter, index_dir=None,
-        deterministic=deterministic,
-    )
+    if ivf is None:
+        ivf = build_ivf_index(
+            corpus, nlist, id_col, vec_col, seed, max_iter, index_dir=None,
+            deterministic=deterministic,
+        )
+    inverted, centroid_df = ivf
     if residual:
         norm = l2_norm(F.col(vec_col))
         res = F.zip_with(

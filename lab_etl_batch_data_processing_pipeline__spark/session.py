@@ -7,9 +7,10 @@ Centralizes every session-level semantic decision (SURVEY.md §7.4):
   timestamps in parquet testdata).
 - **AQE on** (coalesce partitions, skew-join) — at 100 TB the runtime
   re-plan is what keeps shuffle partition sizes sane.
-- **Shuffle partitions** default from ``SPARK_SHUFFLE_PARTITIONS`` (32 for
-  the local[32] test box); a real cluster deployment overrides this to
-  ~2-3x total cores.
+- **Parallelism** defaults to the cores this process may run on
+  (``local[<cores>]`` with as many shuffle partitions);
+  ``SPARK_GRAFT_CPUS`` / ``SPARK_SHUFFLE_PARTITIONS`` override it, and a
+  real cluster deployment sets shuffle partitions to ~2-3x total cores.
 - **Date-parsing policy**: Spark 4 runs ANSI mode by default, where
   ``to_date`` on a malformed string *throws*. Cleaning operators therefore
   use ``try_to_date``/``try_cast`` (operators/cleaning.py) instead of
@@ -34,11 +35,14 @@ def get_spark(
     Safe to call repeatedly: ``getOrCreate`` reuses the active session, in
     which case only dynamic confs apply.
     """
+    host_cpus = str(len(os.sched_getaffinity(0)))
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", host_cpus)
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+        shuffle_partitions = int(
+            os.environ.get("SPARK_SHUFFLE_PARTITIONS", host_cpus)
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -60,9 +64,9 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
         .config("spark.driver.maxResultSize", "4g")
-        # local-mode: the driver JVM IS the executor — 32 task threads,
-        # every broadcast and every persisted frame share its heap, and
-        # Spark's default is 1g. Honored at JVM launch (getOrCreate on an
+        # local-mode: the driver JVM IS the executor — one task thread per
+        # core, every broadcast and every persisted frame share its heap,
+        # and Spark's default is 1g. Honored at JVM launch (getOrCreate on an
         # already-running JVM leaves it unchanged). A real cluster sizes
         # executors instead; see SCALE.md.
         .config(
@@ -72,9 +76,10 @@ def get_spark(
     # Extra driver-JVM flags (GC tuning), honored only at JVM launch like
     # driver.memory. Motivated by the r13/r14 graph-family GC mode: JDK-17
     # G1's GCLocker gives up after 2 retry allocations by default, and
-    # with 32 task threads inside JNI-critical sections (Arrow, zlib,
-    # snappy) a contended locker can fail tasks spuriously mid-cache-write
-    # ("Retried waiting for GCLocker too often"), which then surfaces as
+    # with 32 task threads (the box it was seen on) inside JNI-critical
+    # sections (Arrow, zlib, snappy) a contended locker can fail tasks
+    # spuriously mid-cache-write ("Retried waiting for GCLocker too
+    # often"), which then surfaces as
     # "Block rdd_N does not exist" on the localCheckpoint read side —
     # observed on the 100x edge-strided CC probe. See SCALE.md Round-14.
     java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
